@@ -610,15 +610,6 @@ def jaccard_sorted(a: np.ndarray, b: np.ndarray) -> float:
     return inter / (len(a) + len(b) - inter)
 
 
-# NOTE (measured, r4): a batch-vectorized jaccard (one global lexsort over
-# the concatenated (pair, value) rows + adjacent-dup counting) was built and
-# benchmarked against the per-pair jaccard_sorted loop the verify UDF uses:
-# the loop won 4-20x at every representative shingle-set size (20/50/200
-# elements x 10-20k pairs/batch; lexsort cost alone exceeded the whole loop).
-# Per-pair np.intersect1d over presorted unique arrays is already C-bound;
-# don't "vectorize" it back in without beating that measurement.
-
-
 def sign_document(
     text: str,
     a: np.ndarray,

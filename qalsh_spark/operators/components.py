@@ -45,7 +45,7 @@ assert not _CKPT_LEVEL.deserialized, (
 )
 
 
-def _release_checkpoint(df: DataFrame) -> None:
+def _release_checkpoint(df: DataFrame, blocking: bool = False) -> None:
     """Deterministically free a localCheckpoint'd DataFrame's backing RDD.
 
     DataFrame.unpersist() is a no-op for checkpoints (the data lives in a
@@ -54,20 +54,32 @@ def _release_checkpoint(df: DataFrame) -> None:
     weak-reference sweep — an O(iterations) cache bound instead of O(1).
     Unpersisting the LogicalRDD's RDD is safe ONLY once nothing will read
     the frame again: a local checkpoint has no lineage to recompute from.
+    `blocking` waits until the blocks are gone (DedupResult.release(), whose
+    callers may probe the block manager right after).
     """
     try:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
+            plan.rdd().unpersist(blocking)
     except Exception:
         pass  # best-effort: worst case we fall back to the ContextCleaner
 
 
 def connected_components(
-    edges: DataFrame, max_iter: int = 50, verbose: bool = False
+    edges: DataFrame,
+    max_iter: int = 50,
+    verbose: bool = False,
+    persists: list | None = None,
 ) -> DataFrame:
     """edges(a, b) -> components(doc_id, cluster_id) for every vertex that
-    appears in an edge. cluster_id = min doc_id in the component."""
+    appears in an edge. cluster_id = min doc_id in the component.
+
+    Raises RuntimeError when the labels are still changing after `max_iter`
+    rounds: unconverged labels split components, a silent wrong answer.
+
+    `persists`: optional list collecting the final labels checkpoint the
+    returned frame reads from, so the caller can release it once the
+    components are consumed (DedupResult.release())."""
     import time as _time
 
     _t0 = _time.time()
@@ -147,8 +159,18 @@ def connected_components(
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
+    else:
+        _release_checkpoint(labels)
+        _release_checkpoint(sym)
+        raise RuntimeError(
+            f"connected_components did not converge in max_iter={max_iter} "
+            "rounds (label sum still falling); the labels would split "
+            "components"
+        )
     # sym is not referenced by the returned (checkpointed) labels frame.
     _release_checkpoint(sym)
+    if persists is not None:
+        persists.append(labels)
     return labels.withColumnRenamed("label", "cluster_id")
 
 

@@ -103,9 +103,10 @@ def candidate_pairs_from_buckets(
     so heterogeneous lanes share ONE pair-generation pass — fewer stages,
     one shuffle schedule, one skew story.
 
-    `persists`: optional list collecting the cached DataFrames this operator
-    creates, so the caller can unpersist them once pairs/stats are consumed
-    (DedupResult.release()); without it the cache lives until session end.
+    `persists`: optional list collecting the cached DataFrames and the
+    hot-key checkpoint this operator creates, so the caller can release them
+    once pairs/stats are consumed (DedupResult.release()); without it the
+    cache lives until session end.
     """
     cap = _cap_expr(bucket_cap)
     sz = F.col("bucket_size")
@@ -149,11 +150,14 @@ def candidate_pairs_from_buckets(
     # as a side effect,
     # and hands the two broadcast builds below a materialized table so their
     # concurrent build futures can never race to recompute the upstream.
-    hot = F.broadcast(
+    hot_keys = (
         sizes.filter(sz > cap)
         .select("band_key", "lane_id", "hub")
         .localCheckpoint(True, StorageLevel.MEMORY_AND_DISK)
     )
+    if persists is not None:
+        persists.append(hot_keys)
+    hot = F.broadcast(hot_keys)
 
     # Pass 2a — small buckets (2 <= size <= cap): members of hot buckets are
     # removed by a MAP-SIDE broadcast anti-join BEFORE the collect_list

@@ -31,6 +31,7 @@ from qalsh_spark.config import DedupConfig
 from qalsh_spark.functions.signatures import sign_documents, with_doc_id
 from qalsh_spark.operators.banding import explode_all_bands
 from qalsh_spark.operators.components import (
+    _release_checkpoint,
     clusters_with_representatives,
     connected_components,
 )
@@ -51,15 +52,19 @@ class DedupResult:
     # mutable-default pitfalls: run() always assigns a fresh list)
 
     def release(self) -> None:
-        """Unpersist every cache the pipeline created.  Call once the
-        result DataFrames have been materialized (written/collected) —
-        long-lived sessions (bench loops, repeated run()s) otherwise
-        accumulate cached blocks for the session lifetime."""
+        """Free every cache the pipeline created: persisted frames and the
+        local checkpoints (pair generator hot keys, CC labels, escalation
+        edges).  Call once the result DataFrames have been materialized
+        (written/collected) — a released checkpoint has no lineage to
+        recompute from — since long-lived sessions (bench loops, repeated
+        run()s) otherwise accumulate cached blocks for the session
+        lifetime."""
         for df in self._persists or []:
             try:
-                df.unpersist()
+                df.unpersist(blocking=True)
             except Exception:
                 pass
+            _release_checkpoint(df, blocking=True)
         self._persists = []
 
 
@@ -130,7 +135,7 @@ class DedupPipeline:
         self,
         pairs: DataFrame,
         signatures: DataFrame,
-        documents_with_id: DataFrame | None = None,
+        documents_with_id: DataFrame,
         persists: list | None = None,
     ) -> DataFrame:
         return verify_pairs(
@@ -165,8 +170,10 @@ class DedupPipeline:
         )
         return pairs2
 
-    def cluster(self, edges: DataFrame, meta: DataFrame) -> DataFrame:
-        comp = connected_components(edges.select("a", "b"))
+    def cluster(
+        self, edges: DataFrame, meta: DataFrame, persists: list | None = None
+    ) -> DataFrame:
+        comp = connected_components(edges.select("a", "b"), persists=persists)
         return clusters_with_representatives(comp, meta)
 
     # -- end-to-end ------------------------------------------------------
@@ -269,6 +276,7 @@ class DedupPipeline:
                 from qalsh_spark.operators.components import _CKPT_LEVEL
 
                 edges_df = edges_df.localCheckpoint(True, _CKPT_LEVEL)
+                persists.append(edges_df)
                 pairs2 = self._escalation_pairs(signatures, edges_df, persists)
                 # endpoints of escalated pairs are all unmatched docs, so
                 # the recovered edges are disjoint from the first pass
@@ -282,7 +290,7 @@ class DedupPipeline:
         clusters = stage(
             "clusters",
             lambda: self.cluster(
-                edges, prepared.select("doc_id", "url", "warc_ts")
+                edges, prepared.select("doc_id", "url", "warc_ts"), persists
             ),
         )
         return DedupResult(
@@ -314,14 +322,6 @@ def _prepare(documents: DataFrame) -> DataFrame:
         F.length("text").alias("text_len"),
         F.xxhash64("text").alias("text_hash"),
     )
-
-
-def _with_text(documents: DataFrame) -> DataFrame:
-    from qalsh_spark.functions.signatures import extract_text_udf
-
-    if "text" in documents.columns:
-        return documents.select("url", "text")
-    return documents.select("url", extract_text_udf("html").alias("text"))
 
 
 def _plan_fingerprint(df: DataFrame) -> str:

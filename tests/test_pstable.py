@@ -23,13 +23,11 @@ from qalsh_spark.sources.refdata import (
 
 MNIST = "/root/reference/data/Mnist/Mnist"
 
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(MNIST + ".ds"), reason="reference Mnist data not present"
-)
-
 
 @pytest.fixture(scope="module")
 def mnist():
+    if not os.path.exists(MNIST + ".ds"):
+        pytest.skip("reference Mnist data not present")
     return load_reference_set(MNIST, p=2.0)
 
 

@@ -79,6 +79,13 @@ def test_resume_skips_completed_stages(spark, docs, tmp_path):
     runs = spark.read.parquet(os.path.join(root, "pipeline_runs"))
     assert runs.count() == len(STAGES) + 2
     assert runs.filter("rows < 0").count() == 0
+    assert runs.dtypes == [
+        ("stage", "string"),
+        ("config_hash", "string"),
+        ("input_fingerprint", "string"),
+        ("rows", "bigint"),
+        ("wall_ms", "bigint"),
+    ]
 
 
 def test_config_change_invalidates_checkpoints(spark, docs, tmp_path):

@@ -20,6 +20,8 @@ same way the plan-shape tests pin the IVF/SRP rewrites.
 
 from __future__ import annotations
 
+import pytest
+
 from qalsh_spark.config import DedupConfig
 from qalsh_spark.datagen import cached_corpus
 from qalsh_spark.plans.pipeline import run_dedup
@@ -106,6 +108,46 @@ def test_cc_releases_superseded_checkpoints(spark):
         f"cached (leaked RDD ids: {sorted(leaked)}) — superseded per-"
         "iteration checkpoints must be released inside the loop"
     )
+
+
+def test_cc_raises_when_not_converged(spark):
+    """Min-label propagation moves a label one hop per round, so a path
+    longer than 2 x max_iter cannot converge: connected_components must
+    raise instead of returning labels that split the path into clusters."""
+    from qalsh_spark.operators.components import connected_components
+
+    max_iter = 3
+    n = 2 * max_iter + 2
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "a long, b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(edges, max_iter=max_iter)
+    # the same path converges, to one component, given enough rounds
+    comps = connected_components(edges, max_iter=n).collect()
+    assert {r["cluster_id"] for r in comps} == {0}
+
+
+@pytest.mark.parametrize("with_checkpoints", [False, True])
+def test_release_frees_every_cache_of_the_run(spark, tmp_path, with_checkpoints):
+    """DedupResult.release() must free every cache the run made — persisted
+    frames AND local checkpoints (the pair generator's hot-key table, CC's
+    final labels), whose DataFrame.unpersist() is a no-op — with and
+    without a checkpoint catalog."""
+
+    def cached_ids():
+        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        return {i.id() for i in infos if i.numCachedPartitions() > 0}
+
+    before = cached_ids()
+    docs = read_documents(spark, cached_corpus(300))
+    root = str(tmp_path / "ckpt") if with_checkpoints else None
+    res = run_dedup(spark, docs, DedupConfig(), checkpoint_root=root)
+    assert res.clusters.count() > 0
+    assert cached_ids() - before, "the run cached nothing: probe went stale"
+    res.release()
+    leaked = cached_ids() - before
+    assert not leaked, f"RDDs still cached after release(): {sorted(leaked)}"
 
 
 def test_sign_partition_count_bounded_by_row_budget(spark):
