@@ -13,7 +13,7 @@ from __future__ import annotations
 import hashlib
 import json
 import math
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -41,14 +41,9 @@ class DedupConfig:
     suffix_window: int = 16       # rolling-hash window (bytes) for anchors
     suffix_gap: int = 32          # expected anchor gap: anchor where h % gap == 0
     lcp_min: int = 100            # shared-run length proven by one bucket key
-    run_min: int = 200            # minimum verbatim run (docs-level semantics)
 
     # --- skew / scale -------------------------------------------------------
     bucket_cap: int = 64          # buckets larger than this use star pairing
-    shuffle_partitions: int = 32
-
-    # --- misc ---------------------------------------------------------------
-    max_pairs_per_bucket: int = field(default=2016, repr=False)  # cap*(cap-1)/2
 
     def __post_init__(self) -> None:
         if self.bands * self.rows != self.num_perm:
@@ -127,8 +122,3 @@ class DedupConfig:
     def simhash_n_keys(self) -> int:
         return math.comb(self.simhash_blocks, self.simhash_key_blocks)
 
-
-def effective_parallelism(n_docs: int, target_rows_per_task: int = 250_000) -> int:
-    """Partition-count heuristic: at 10^12 docs this yields ~4M tasks over the
-    cluster; at test scale it stays small enough to avoid scheduling overhead."""
-    return max(8, min(200_000, math.ceil(n_docs / target_rows_per_task)))

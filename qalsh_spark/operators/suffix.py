@@ -7,7 +7,7 @@ walk neighbors in order).  The scalable Spark reimagination:
 
   1. per document, sample suffix start positions at CONTENT-DEFINED anchors
      (rolling hash of the preceding 16 bytes ≡ 0 mod gap — winnowing-style).
-     Content-defined means two documents sharing a >=run_min verbatim run
+     Content-defined means two documents sharing a >=lcp_min verbatim run
      place anchors at the same content offsets inside the run, so they emit
      comparable suffixes without any global alignment;
   2. hash the `lcp_min` bytes after each anchor into an int64 bucket key

@@ -195,8 +195,9 @@ class DedupPipeline:
                 df = cat.write(df, name, fp)
             else:
                 # No checkpoint catalog: persist the stage boundary so the
-                # many downstream consumers (verify joins signatures twice,
-                # clustering reads it again) don't re-execute the whole
+                # many downstream consumers (verify reads the pairs twice and
+                # the signatures once per pair side, clustering reads the
+                # prepared table again) don't re-execute the whole
                 # upstream plan — the in-memory analog of the catalog's
                 # read-back-after-write.  SERIALIZED level (not the
                 # deserialized JVM default): blocks this cache spills under

@@ -29,15 +29,25 @@ def oracle_result(corpus):
 
 
 @pytest.fixture(scope="module")
-def spark_result(spark, corpus):
+def spark_run(spark, corpus):
+    """(clusters {doc_id: cluster_id}, edge rows {(a, b): (jaccard, lanes)})."""
     path = cached_corpus(N_DOCS)
     docs = spark.read.parquet(f"{path}/documents.parquet")
     res = DedupPipeline(DedupConfig()).run(docs)
     clusters = {
         r["doc_id"]: r["cluster_id"] for r in res.clusters.collect()
     }
-    edges = {(r["a"], r["b"]) for r in res.edges.collect()}
+    edges = {
+        (r["a"], r["b"]): (r["jaccard"], list(r["lanes"]))
+        for r in res.edges.collect()
+    }
     return clusters, edges
+
+
+@pytest.fixture(scope="module")
+def spark_result(spark_run):
+    clusters, edges = spark_run
+    return clusters, set(edges)
 
 
 def test_edge_parity(spark_result, oracle_result):
@@ -78,3 +88,27 @@ def test_gold_exact_dups_always_clustered(spark_result, corpus):
     for ids in by_text.values():
         if len(ids) > 1:
             assert len({clusters[d] for d in ids}) == 1
+
+
+def test_every_edge_jaccard_is_exact(spark_run, oracle_result):
+    """Every edge reports the exact shingle Jaccard of its endpoints, whichever
+    lanes accepted it: 1.0 on exact-group edges, and on every other edge
+    kernels.jaccard_sorted over the oracle's shingle sets, compared with ==."""
+    import numpy as np
+
+    from qalsh_spark import kernels as K
+
+    _, edges = spark_run
+    sigs = oracle_result.signatures
+    wrong = []
+    for (a, b), (jac, lanes) in edges.items():
+        if lanes == ["exact"]:
+            want = 1.0
+        else:
+            want = K.jaccard_sorted(
+                sigs[a]["shingles"].view(np.uint64),
+                sigs[b]["shingles"].view(np.uint64),
+            )
+        if jac != want:
+            wrong.append((a, b, lanes, jac, want))
+    assert not wrong, f"{len(wrong)} of {len(edges)} edges, e.g. {wrong[:3]}"
