@@ -45,16 +45,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    # Host-phase stamp: this sandbox's delivered per-core CPU swings 2-6x
-    # between phases (shared infrastructure; see BENCH/BASELINE.md honesty
-    # box — e.g. the BLAS-shape probe measured 2834 vs 470 units/s/core in
-    # two windows hours apart).  A cross-round wall comparison without the
-    # phase recorded next to it is meaningless, so every bench JSON carries
-    # the probe rates measured immediately before the queries ran.
-    from bench_scaling import cpu_probe
-
-    host_probe = cpu_probe(4, dur=6.0)
-
     from qalsh_spark.session import get_spark
     from qalsh_spark.queries import QUERIES
 
@@ -104,59 +94,8 @@ def main() -> None:
         "cpus": int(cpus),
         "n_docs": n_docs,
         "dedup_docs_per_hour": round(n_docs / dedup_wall * 3600.0, 1),
-        "host_probe_4proc": host_probe,
     }
-    out.update(_normalized_vs_previous(timings, host_probe))
     print(json.dumps(out))
-
-
-def _normalized_vs_previous(timings: dict, host_probe: dict) -> dict:
-    """Probe-normalize this run's walls against the PREVIOUS round's stamp
-    so cross-round tables are noise-corrected by construction (this host's
-    delivered per-core CPU swings 2-6x between phases — see the honesty box
-    in BENCH/BASELINE.md; the r4 ABAB proved within-rev swing exceeding
-    rev-to-rev deltas).  Rule: normalized_wall = wall * gmean over probe
-    kinds of (rate_now / rate_prev) — if the host is currently FASTER than
-    it was for the previous round's run, raw walls flatter this rev, so
-    they are scaled UP into the previous round's phase (and vice versa).
-    Emits nothing if no previous stamped round exists."""
-    import glob
-    import math
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    prev_files = sorted(
-        glob.glob(os.path.join(here, "BENCH_r*.json")),
-        key=lambda f: int(re.search(r"BENCH_r(\d+)", f).group(1)),
-    )
-    if not prev_files:
-        return {}
-    prev_name = os.path.basename(prev_files[-1])
-    try:
-        with open(prev_files[-1]) as fh:
-            prev = json.load(fh)
-        # the driver wraps bench.py's JSON line under "parsed"
-        if "parsed" in prev and isinstance(prev["parsed"], dict):
-            prev = prev["parsed"]
-        prev_probe = prev["host_probe_4proc"]
-        ratios = [
-            host_probe[k] / prev_probe[k]
-            for k in ("python_loop", "numpy_matmul")
-            if prev_probe.get(k) and host_probe.get(k)
-        ]
-        if not ratios:
-            return {}
-        ratio = math.exp(sum(math.log(r) for r in ratios) / len(ratios))
-    except (OSError, KeyError, ValueError, ZeroDivisionError, json.JSONDecodeError):
-        return {}
-    return {
-        "normalized_vs": prev_name,
-        "probe_ratio": round(ratio, 4),
-        "normalized_queries": {
-            q: round(wall * ratio, 3) for q, wall in timings.items()
-        },
-        "normalized_total": round(sum(timings.values()) * ratio, 3),
-    }
 
 
 if __name__ == "__main__":

@@ -54,11 +54,10 @@ def main() -> None:
                     help="pstable only: projection count; default auto-tunes"
                     " from (c, p, n) with the reference's formula"
                     " (methods/qalsh.h:228-235, kernels.pstable_m)")
-    ap.add_argument("--max-rounds", type=int, default=0,
-                    help="pstable only: virtual-rehashing rounds (0 = single "
-                    "pass); each round doubles the bucket width for queries "
-                    "not yet certified by the reference's kth-dist <= c*R "
-                    "stop rule")
+    ap.add_argument("--max-rounds", type=int, default=1,
+                    help="pstable only: virtual-rehashing rounds (>= 1); each "
+                    "round doubles the bucket width for queries not yet "
+                    "certified by the reference's kth-dist <= c*R stop rule")
     ap.add_argument("--n-queries", type=int, default=10,
                     help="first N vectors double as the query set (or use --queries)")
     ap.add_argument("--queries", default=None,

@@ -1,4 +1,8 @@
-from qalsh_spark.functions.signatures import extract_text_udf, sign_documents
+from qalsh_spark.functions.signatures import (
+    extract_text_udf,
+    prepare_documents,
+    sign_documents,
+)
 from qalsh_spark.functions.text import (
     language_id,
     quality_features,
@@ -8,6 +12,7 @@ from qalsh_spark.functions.text import (
 
 __all__ = [
     "extract_text_udf",
+    "prepare_documents",
     "sign_documents",
     "language_id",
     "quality_features",

@@ -158,29 +158,38 @@ def doc_id_expr(url_col):
     return F.shiftleft(hi, 32).bitwiseOR(lo)
 
 
-def with_doc_id(documents: DataFrame) -> DataFrame:
-    """Mint the compact deterministic doc_id from the url primary key."""
-    return documents.withColumn("doc_id", doc_id_expr(F.col("url")))
-
-
-def sign_documents(
-    documents: DataFrame, cfg: DedupConfig, rows_hint: int | None = None
-) -> DataFrame:
-    """documents(url, warc_ts, html?, text, lang) -> signatures table
-    (FIXTURES.md §2 + suffix-lane columns).  If `text` is null/absent it is
-    extracted from `html` (stage 2 'extract' of SURVEY.md §3.4).
-
-    `rows_hint`: approximate input row count, if the caller knows it (the
-    batch job counts its input anyway).  Bounds the signing stage's
-    per-partition ROW budget — see the repartition note below."""
+def prepare_documents(documents: DataFrame) -> DataFrame:
+    """documents(url, warc_ts?, html?, text?, lang?) -> prepared rows: the
+    one input normalizer.  Extracts text where only html is present
+    (ensure_text), fills absent warc_ts/lang with nulls, mints the
+    deterministic doc_id from the url, and keys every row by the byte-exact
+    (text_len, text_hash) pair for the pipeline's exact-group pre-pass.
+    Output: (url, warc_ts, lang, text, doc_id, text_len, text_hash); the
+    key columns are pruned away by callers that do not read them."""
     cols = set(documents.columns)
     df = ensure_text(documents)
     if "warc_ts" not in cols:
         df = df.withColumn("warc_ts", F.lit(None).cast("timestamp"))
     if "lang" not in cols:
         df = df.withColumn("lang", F.lit(None).cast("string"))
-    df = with_doc_id(df)
-    narrow = df.select("doc_id", "url", "warc_ts", "lang", "text")
+    return df.select(
+        "url", "warc_ts", "lang", "text",
+        doc_id_expr(F.col("url")).alias("doc_id"),
+        F.length("text").alias("text_len"),
+        F.xxhash64("text").alias("text_hash"),
+    )
+
+
+def sign_documents(
+    prepared: DataFrame, cfg: DedupConfig, rows_hint: int | None = None
+) -> DataFrame:
+    """prepared(doc_id, url, warc_ts, lang, text) rows (prepare_documents)
+    -> signatures table (FIXTURES.md §2 + suffix-lane columns).
+
+    `rows_hint`: approximate input row count, if the caller knows it (the
+    batch job counts its input anyway).  Bounds the signing stage's
+    per-partition ROW budget — see the repartition note below."""
+    narrow = prepared.select("doc_id", "url", "warc_ts", "lang", "text")
     # The signing stage is the CPU-heaviest Python work in the pipeline; a
     # small input (few parquet splits) would otherwise cap its parallelism at
     # the split count regardless of cluster size.  Round-robin repartition to

@@ -14,8 +14,9 @@ Reference lineage:
 - The fixed seed mirrors `srand(6)` at methods/main.cc:152 — index builds are
   reproducible.
 - `simhash64` adds the complementary bitwise fingerprint lane (Hamming<=h).
-- `anchors`/`suffixes_for_text` implement the content-defined sampling that
-  feeds the exact-substring (suffix) lane.
+- `anchors`/`suffix_key_pairs_for_text` implement the content-defined
+  sampling that feeds the exact-substring (suffix) lane: equal keys mean
+  the `lcp_min` bytes after an anchor are equal, so no LCP is computed.
 
 All functions are deterministic, vectorized, and dependency-free (NumPy only).
 """
@@ -522,19 +523,6 @@ def anchors(text: str, window: int = 16, gap: int = 32) -> np.ndarray:
     return pos.astype(np.int64)
 
 
-def suffixes_for_text(
-    text: str, window: int = 16, gap: int = 32, suffix_len: int = 256, lcp_min: int = 100
-) -> list[str]:
-    """Sampled suffixes (anchor -> anchor+suffix_len chars). Suffixes shorter
-    than lcp_min can never witness a qualifying LCP and are dropped."""
-    out = []
-    for p in anchors(text, window, gap):
-        s = text[int(p) : int(p) + suffix_len]
-        if len(s) >= lcp_min:
-            out.append(s)
-    return out
-
-
 def suffix_key_pairs_for_text(
     text: str, window: int = 16, gap: int = 32, lcp_min: int = 100
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -589,17 +577,6 @@ def suffix_keys_for_text(
     qualifying run and are dropped."""
     k1, _ = suffix_key_pairs_for_text(text, window, gap, lcp_min)
     return k1
-
-
-def lcp(a: str, b: str) -> int:
-    """Longest common prefix length of two strings (vectorized over bytes)."""
-    xa = np.frombuffer(a.encode("utf-8", "surrogatepass"), dtype=np.uint8)
-    xb = np.frombuffer(b.encode("utf-8", "surrogatepass"), dtype=np.uint8)
-    n = min(len(xa), len(xb))
-    if n == 0:
-        return 0
-    neq = np.nonzero(xa[:n] != xb[:n])[0]
-    return int(neq[0]) if len(neq) else n
 
 
 def jaccard_sorted(a: np.ndarray, b: np.ndarray) -> float:

@@ -37,6 +37,13 @@ LANE_NAMES = {
     LANE_SUFFIX: "suffix",
     LANE_EMBED: "embed",
 }
+LANE_IDS = {name: lid for lid, name in LANE_NAMES.items()}
+# signatures column holding each text lane's bucket keys
+_LANE_KEYS = {
+    "minhash": "band_keys",
+    "simhash": "simhash_keys",
+    "suffix": "suffix_keys",
+}
 
 
 def lane_name_col(lane_id_col):
@@ -76,36 +83,18 @@ def reband_minhash_udf(bands: int, rows: int):
     return _udf
 
 
-def explode_minhash_bands(signatures: DataFrame) -> DataFrame:
-    return signatures.select(
-        "doc_id", F.explode(_lane("band_keys", LANE_MINHASH)).alias("band")
-    ).select("doc_id", "band.lane_id", "band.band_key")
+def explode_bands(signatures: DataFrame, lanes) -> DataFrame:
+    """Bucket rows (doc_id, lane_id, band_key) of the named `lanes`
+    ("minhash", "simhash", "suffix") in ONE scan of the signatures table.
 
-
-def explode_simhash_bands(signatures: DataFrame) -> DataFrame:
-    """SimHash block-combination keys (kernels.simhash_band_keys): docs at
-    Hamming distance <= blocks-key_blocks share >=1 key."""
-    return signatures.select(
-        "doc_id", F.explode(_lane("simhash_keys", LANE_SIMHASH)).alias("band")
-    ).select("doc_id", "band.lane_id", "band.band_key")
-
-
-def explode_all_bands(
-    signatures: DataFrame,
-    include_simhash: bool = True,
-    include_suffix: bool = False,
-) -> DataFrame:
-    """All lanes in ONE scan of the signatures table.
+    SimHash keys are block combinations (kernels.simhash_band_keys): docs
+    at Hamming distance <= blocks-key_blocks share >=1 key.
 
     A self-union of the per-lane selects would defeat Spark's
     cache/exchange reuse (plan canonicalization misses across union branches —
     measured ~50x recompute cost), so the lanes are concatenated per-row into
     one array<struct> and exploded JVM-side."""
-    parts = [_lane("band_keys", LANE_MINHASH)]
-    if include_simhash:
-        parts.append(_lane("simhash_keys", LANE_SIMHASH))
-    if include_suffix:
-        parts.append(_lane("suffix_keys", LANE_SUFFIX))
+    parts = [_lane(_LANE_KEYS[name], LANE_IDS[name]) for name in lanes]
     combined = F.concat(*parts) if len(parts) > 1 else parts[0]
     return signatures.select(
         "doc_id", F.explode(combined).alias("band")

@@ -68,7 +68,6 @@ def _release_checkpoint(df: DataFrame, blocking: bool = False) -> None:
 def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
-    verbose: bool = False,
     persists: list | None = None,
 ) -> DataFrame:
     """edges(a, b) -> components(doc_id, cluster_id) for every vertex that
@@ -80,9 +79,6 @@ def connected_components(
     `persists`: optional list collecting the final labels checkpoint the
     returned frame reads from, so the caller can release it once the
     components are consumed (DedupResult.release())."""
-    import time as _time
-
-    _t0 = _time.time()
     # Symmetrize with ONE scan via explode instead of a self-union: Spark's
     # plan canonicalization fails to reuse cache/exchange across self-union
     # branches (measured 50x slower), and explode halves the input reads at
@@ -108,8 +104,6 @@ def connected_components(
         .repartition(F.col("dst"))
     )
     sym = sym.localCheckpoint(True, _CKPT_LEVEL)
-    if verbose:
-        print(f"[cc] sym ckpt {_time.time()-_t0:.1f}s")
     labels = (
         sym.groupBy("src")
         .agg(F.least(F.min("dst"), F.first("src")).alias("label"))
@@ -117,8 +111,6 @@ def connected_components(
         .withColumn("label", F.least(F.col("label"), F.col("doc_id")))
         .localCheckpoint(True, _CKPT_LEVEL)
     )
-    if verbose:
-        print(f"[cc] labels init {_time.time()-_t0:.1f}s")
 
     # Labels only ever decrease, so the exact (decimal — no int64 overflow)
     # sum of labels strictly decreases iff ANY label changed: convergence is
@@ -129,7 +121,7 @@ def connected_components(
         ).collect()[0]["s"]
 
     prev_sum = _label_sum(labels)
-    for it in range(max_iter):
+    for _ in range(max_iter):
         # neighbor-min pass: label'(v) = min(label(v), min_{u~v} label(u))
         neigh = (
             sym.join(labels.withColumnRenamed("doc_id", "dst"), on="dst")
@@ -154,8 +146,6 @@ def connected_components(
         # instead of O(iterations) frames awaiting the ContextCleaner.
         _release_checkpoint(labels)
         labels = new_labels
-        if verbose:
-            print(f"[cc] iter={it} sum={new_sum} t={_time.time()-_t0:.1f}s")
         if new_sum == prev_sum:
             break
         prev_sum = new_sum

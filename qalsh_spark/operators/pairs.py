@@ -57,7 +57,7 @@ import pyspark.sql.functions as F
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
-from qalsh_spark.operators.banding import LANE_NAMES, lane_name_col
+from qalsh_spark.operators.banding import LANE_IDS, lane_name_col
 
 
 def _pair_structs(ids_col):
@@ -77,10 +77,9 @@ def _cap_expr(bucket_cap) -> F.Column:
     would make BOTH the small- and hot-bucket filters false and silently
     drop every bucket of that lane)."""
     if isinstance(bucket_cap, dict):
-        name_to_id = {v: k for k, v in LANE_NAMES.items()}
         expr = None
         for lane, c in bucket_cap.items():
-            lid = name_to_id[lane] if isinstance(lane, str) else lane
+            lid = LANE_IDS[lane] if isinstance(lane, str) else lane
             w = F.when(F.col("lane_id") == F.lit(lid), F.lit(c))
             expr = w if expr is None else F.coalesce(expr, w)
         default = max(bucket_cap.values())
@@ -91,7 +90,6 @@ def _cap_expr(bucket_cap) -> F.Column:
 def candidate_pairs_from_buckets(
     buckets: DataFrame,
     bucket_cap: int | dict[str, int] = 64,
-    dedup: bool = True,
     persists: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """buckets(doc_id, lane_id, band_key) ->
@@ -185,9 +183,7 @@ def candidate_pairs_from_buckets(
         .filter(F.col("doc_id") != F.col("hub"))
         .select(F.col("hub").alias("a"), F.col("doc_id").alias("b"), "lane_id")
     )
-    pairs = pairs_small.unionByName(pairs_star)
-    if dedup:
-        pairs = pairs.dropDuplicates(["a", "b", "lane_id"])
+    pairs = pairs_small.unionByName(pairs_star).dropDuplicates(["a", "b", "lane_id"])
 
     # stats: one slim row per bucket, re-aggregated in-stage from the same
     # persisted partitioning — consuming stats costs a cache scan, not a

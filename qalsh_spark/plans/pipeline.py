@@ -28,9 +28,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from qalsh_spark.config import DedupConfig
-from qalsh_spark.functions.signatures import sign_documents, with_doc_id
-from qalsh_spark.operators.banding import explode_all_bands
+from qalsh_spark.functions.signatures import prepare_documents, sign_documents
+from qalsh_spark.operators.banding import explode_bands
 from qalsh_spark.operators.components import (
+    _CKPT_LEVEL,
     _release_checkpoint,
     clusters_with_representatives,
     connected_components,
@@ -68,6 +69,10 @@ class DedupResult:
         self._persists = []
 
 
+# Escalation re-bands unmatched docs for threshold - ESCALATE_DROP.
+ESCALATE_DROP = 0.15
+
+
 class DedupPipeline:
     def __init__(
         self,
@@ -76,7 +81,6 @@ class DedupPipeline:
         enable_suffix: bool = True,
         enable_simhash: bool = True,
         escalate: bool = False,
-        escalate_drop: float = 0.15,
         rows_hint: int | None = None,
     ):
         self.cfg = cfg or DedupConfig()
@@ -90,57 +94,12 @@ class DedupPipeline:
         # multi-band escalation (virtual-rehashing analog,
         # /root/reference/methods/qalsh.h:844-871): after the first verify,
         # re-band the still-unmatched docs' EXISTING minhash signatures at a
-        # coarser (b, r) targeting threshold - escalate_drop, and verify the
+        # coarser (b, r) targeting threshold - ESCALATE_DROP, and verify the
         # recovered candidates.  Buys back the S-curve discovery misses just
         # above the threshold (P(miss|s=0.52) ~ 9% at the default 32x4) at
         # the cost of one extra bucket/pair/verify pass over the unmatched
         # subset only.
         self.escalate = escalate
-        self.escalate_drop = escalate_drop
-
-    # -- stages ----------------------------------------------------------
-    def sign(self, documents: DataFrame) -> DataFrame:
-        return sign_documents(documents, self.cfg, rows_hint=self.rows_hint)
-
-    def buckets(self, signatures: DataFrame) -> DataFrame:
-        return explode_all_bands(
-            signatures,
-            include_simhash=self.enable_simhash,
-            include_suffix=self.enable_suffix,
-        )
-
-    def candidate_pairs(
-        self, signatures: DataFrame, persists: list | None = None
-    ) -> tuple[DataFrame, DataFrame]:
-        """All lanes (minhash + simhash bands, suffix keys — all columns of
-        the signatures table, emitted by the single signing pass) explode
-        into ONE bucket stream and pair-generate in a single pass — one
-        shuffle schedule, one skew treatment, per-lane caps."""
-        caps: dict[str, int] = {
-            "minhash": self.cfg.bucket_cap,
-            "simhash": self.cfg.bucket_cap,
-        }
-        if self.enable_suffix:
-            caps["suffix"] = SUFFIX_BUCKET_CAP
-        # The operator hash-exchanges the bucket stream once and persists
-        # the shuffled copy at the serialized MEMORY_AND_DISK level (RAM
-        # while it fits, graceful spill — see pairs.py:122-124); every
-        # pair-generation consumer reads that one materialization
-        # exchange-free (pairs.py module doc).
-        return candidate_pairs_from_buckets(
-            self.buckets(signatures), caps, persists=persists,
-        )
-
-    def verify(
-        self,
-        pairs: DataFrame,
-        signatures: DataFrame,
-        documents_with_id: DataFrame,
-        persists: list | None = None,
-    ) -> DataFrame:
-        return verify_pairs(
-            pairs, signatures, self.cfg, documents_with_id, persists=persists
-        )
 
     def _escalation_pairs(
         self, signatures: DataFrame, edges: DataFrame, persists: list
@@ -150,7 +109,7 @@ class DedupPipeline:
         SURVEY §2.6).  Re-uses stored minhash columns; no re-signing."""
         from qalsh_spark.operators.banding import LANE_MINHASH, reband_minhash_udf
 
-        target = max(0.05, self.cfg.jaccard_threshold - self.escalate_drop)
+        target = max(0.05, self.cfg.jaccard_threshold - ESCALATE_DROP)
         b2, r2 = DedupConfig.tune_bands_prefix(target, self.cfg.num_perm)
         matched = (
             edges.select(F.col("a").alias("doc_id"))
@@ -170,13 +129,6 @@ class DedupPipeline:
         )
         return pairs2
 
-    def cluster(
-        self, edges: DataFrame, meta: DataFrame, persists: list | None = None
-    ) -> DataFrame:
-        comp = connected_components(edges.select("a", "b"), persists=persists)
-        return clusters_with_representatives(comp, meta)
-
-    # -- end-to-end ------------------------------------------------------
     def run(
         self, documents: DataFrame, input_fingerprint: str | None = None
     ) -> DedupResult:
@@ -204,14 +156,12 @@ class DedupPipeline:
                 # pressure would otherwise be re-inflated whole into the
                 # memory store on every read (maybeCacheDiskValuesInMemory),
                 # which OOM-killed the 24g 4M-doc scaling leg.
-                from qalsh_spark.operators.components import _CKPT_LEVEL
-
                 df = df.persist(_CKPT_LEVEL)
                 persists.append(df)
             return df
 
         # extract + id + exact-group key, one narrow table reused everywhere
-        prepared = stage("prepared", lambda: _prepare(documents))
+        prepared = stage("prepared", lambda: prepare_documents(documents))
 
         # Narrow columns only for the membership edges (text never shuffles
         # here): one hash groupBy + one small join.  The group key is
@@ -247,21 +197,43 @@ class DedupPipeline:
         reps = (
             prepared.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
-            .select("url", "warc_ts", "lang", "text")
+            .select("doc_id", "url", "warc_ts", "lang", "text")
         )
 
-        signatures = stage("signatures", lambda: self.sign(reps))
+        signatures = stage(
+            "signatures",
+            lambda: sign_documents(reps, self.cfg, rows_hint=self.rows_hint),
+        )
         pairs_holder: dict = {}
 
+        # All lanes (minhash + simhash bands, suffix keys — all columns of
+        # the signatures table, emitted by the single signing pass) explode
+        # into ONE bucket stream and pair-generate in a single pass — one
+        # shuffle schedule, one skew treatment, per-lane caps.  The lanes
+        # exploded are exactly the lanes capped.
+        caps: dict[str, int] = {"minhash": self.cfg.bucket_cap}
+        if self.enable_simhash:
+            caps["simhash"] = self.cfg.bucket_cap
+        if self.enable_suffix:
+            caps["suffix"] = SUFFIX_BUCKET_CAP
+
         def make_pairs():
-            p, s = self.candidate_pairs(signatures, persists=persists)
+            # The operator hash-exchanges the bucket stream once and
+            # persists the shuffled copy at the serialized MEMORY_AND_DISK
+            # level; every pair-generation consumer reads that one
+            # materialization exchange-free (pairs.py module doc).
+            p, s = candidate_pairs_from_buckets(
+                explode_bands(signatures, caps), caps, persists=persists,
+            )
             pairs_holder["stats"] = s
             return p
 
         pairs = stage("pairs", make_pairs)
 
         def make_edges():
-            verified = self.verify(pairs, signatures, prepared, persists=persists)
+            verified = verify_pairs(
+                pairs, signatures, self.cfg, prepared, persists=persists
+            )
             edges_df = verified.unionByName(exact_edges)
             if self.escalate:
                 # localCheckpoint (not persist): the escalation pass embeds
@@ -274,15 +246,13 @@ class DedupPipeline:
                 # MEMORY_AND_DISK) re-inflates disk-spilled blocks as Java
                 # objects on every read — heap OOM at leg scale (see
                 # operators/components._CKPT_LEVEL).
-                from qalsh_spark.operators.components import _CKPT_LEVEL
-
                 edges_df = edges_df.localCheckpoint(True, _CKPT_LEVEL)
                 persists.append(edges_df)
                 pairs2 = self._escalation_pairs(signatures, edges_df, persists)
                 # endpoints of escalated pairs are all unmatched docs, so
                 # the recovered edges are disjoint from the first pass
-                verified2 = self.verify(
-                    pairs2, signatures, prepared, persists=persists
+                verified2 = verify_pairs(
+                    pairs2, signatures, self.cfg, prepared, persists=persists
                 )
                 edges_df = edges_df.unionByName(verified2)
             return edges_df
@@ -290,39 +260,15 @@ class DedupPipeline:
         edges = stage("edges", make_edges)
         clusters = stage(
             "clusters",
-            lambda: self.cluster(
-                edges, prepared.select("doc_id", "url", "warc_ts"), persists
+            lambda: clusters_with_representatives(
+                connected_components(edges.select("a", "b"), persists=persists),
+                prepared.select("doc_id", "url", "warc_ts"),
             ),
         )
         return DedupResult(
             signatures, pairs, edges, clusters, pairs_holder.get("stats"),
             _persists=persists,
         )
-
-
-def _prepare(documents: DataFrame) -> DataFrame:
-    """Stage 'prepared': extract text (when only html is present), mint the
-    deterministic doc_id, and key every row by the byte-exact
-    (text_len, text_hash) pair for the exact-group pre-pass.  Output:
-    (url, warc_ts, lang, text, doc_id, text_len, text_hash) — the narrow
-    table every later stage joins against."""
-    from qalsh_spark.functions.signatures import ensure_text
-
-    cols = set(documents.columns)
-    # ensure_text carries the split-union extraction (see its docstring for
-    # the ArrowEvalPython-hoisting rationale) shared with sign_documents and
-    # the streaming dedup path.
-    df = ensure_text(documents)
-    if "warc_ts" not in cols:
-        df = df.withColumn("warc_ts", F.lit(None).cast("timestamp"))
-    if "lang" not in cols:
-        df = df.withColumn("lang", F.lit(None).cast("string"))
-    df = with_doc_id(df)
-    return df.select(
-        "url", "warc_ts", "lang", "text", "doc_id",
-        F.length("text").alias("text_len"),
-        F.xxhash64("text").alias("text_hash"),
-    )
 
 
 def _plan_fingerprint(df: DataFrame) -> str:

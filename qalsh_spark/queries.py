@@ -1111,21 +1111,24 @@ WHERE emb_fp = {_EMB_FP_SQL}
 """
 
 
-def q_minhash_signatures(spark, sf_dir):
-    from qalsh_spark.functions.signatures import sign_documents
+def _adapted_signatures(spark, sf_dir):
+    from qalsh_spark.functions.signatures import prepare_documents, sign_documents
 
-    sig = sign_documents(_adapted_docs(spark, sf_dir), DedupConfig())
+    return sign_documents(prepare_documents(_adapted_docs(spark, sf_dir)), DedupConfig())
+
+
+def q_minhash_signatures(spark, sf_dir):
+    sig = _adapted_signatures(spark, sf_dir)
     return sig.select("doc_id", "n_tokens", "shingle_count", "simhash")
 
 
 def q_simhash_hamming_pairs(spark, sf_dir):
     """JVM-only Hamming verify over simhash band candidates."""
-    from qalsh_spark.functions.signatures import sign_documents
-    from qalsh_spark.operators.banding import explode_simhash_bands
+    from qalsh_spark.operators.banding import explode_bands
     from qalsh_spark.operators.pairs import candidate_pairs_from_buckets
 
-    sig = sign_documents(_adapted_docs(spark, sf_dir), DedupConfig())
-    pairs, _ = candidate_pairs_from_buckets(explode_simhash_bands(sig), 64)
+    sig = _adapted_signatures(spark, sf_dir)
+    pairs, _ = candidate_pairs_from_buckets(explode_bands(sig, ["simhash"]), 64)
     fp = sig.select("doc_id", "simhash")
     return (
         pairs.join(fp.withColumnsRenamed({"doc_id": "a", "simhash": "fa"}), on="a")
@@ -1138,9 +1141,9 @@ def q_simhash_hamming_pairs(spark, sf_dir):
 
 def q_substring_pairs(spark, sf_dir):
     from qalsh_spark.operators.suffix import substring_candidate_pairs
-    from qalsh_spark.functions.signatures import with_doc_id
+    from qalsh_spark.functions.signatures import prepare_documents
 
-    docs = with_doc_id(_adapted_docs(spark, sf_dir))
+    docs = prepare_documents(_adapted_docs(spark, sf_dir))
     return substring_candidate_pairs(docs, DedupConfig())
 
 
@@ -1219,9 +1222,9 @@ def q_pstable_ann_topk(spark, sf_dir):
 
 def q_pstable_rehash_ann_topk(spark, sf_dir):
     """Golden-oracle checked: the p-stable lane's VIRTUAL-REHASHING loop
-    (operators/ann.py _pstable_rehash_topk — the reference's geometric
-    radius growth + kth <= c*R stop rule, methods/qalsh.h:844-871 and
-    478-479) started at w0 = 0.8, a quarter of the single-pass lane's
+    (operators/ann.py pstable_topk, max_rounds=6 — the reference's
+    geometric radius growth + kth <= c*R stop rule, methods/qalsh.h:844-871
+    and 478-479) started at w0 = 0.8, a quarter of the one-round lane's
     width, so the early rounds genuinely under-fill and the loop runs.
     The oracle is the frozen NumPy replay of the same round/certificate
     semantics in scripts/make_golden.build_ann_lanes.  Recall floors for

@@ -94,16 +94,6 @@ def get_spark(
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
-    # Diagnostic: QALSH_EVENTLOG_DIR=<dir> writes the Spark event log there
-    # (stage submit/complete timeline) for post-run scheduling-gap analysis.
-    evlog = os.environ.get("QALSH_EVENTLOG_DIR")
-    if evlog:
-        os.makedirs(evlog, exist_ok=True)
-        builder = (
-            builder.config("spark.eventLog.enabled", "true")
-            .config("spark.eventLog.dir", evlog)
-            .config("spark.eventLog.compress", "false")
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from qalsh_spark.config import DedupConfig
-from qalsh_spark.functions.signatures import sign_documents
+from qalsh_spark.functions.signatures import prepare_documents, sign_documents
 
 
 def streaming_exact_dedup(
@@ -75,7 +75,7 @@ def incremental_signatures(
     appended to output_dir. Returns the StreamingQuery (caller stops it)."""
     cfg = cfg or DedupConfig()
     stream = spark.readStream.schema(schema).parquet(input_dir)
-    signed: DataFrame = sign_documents(stream, cfg)
+    signed: DataFrame = sign_documents(prepare_documents(stream), cfg)
     return (
         signed.writeStream.format("parquet")
         .option("path", output_dir)

@@ -34,7 +34,7 @@ import pyspark.sql.types as T
 from pyspark.sql import SparkSession
 
 from qalsh_spark.config import DedupConfig
-from qalsh_spark.functions.signatures import sign_documents
+from qalsh_spark.functions.signatures import prepare_documents, sign_documents
 from qalsh_spark.operators.banding import LANE_MINHASH, LANE_SIMHASH, _lane
 
 _PAIR_SCHEMA = T.StructType(
@@ -141,7 +141,7 @@ def streaming_neardup_candidates(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(input_dir)
-    signed = sign_documents(stream, cfg)
+    signed = sign_documents(prepare_documents(stream), cfg)
     buckets = signed.select(
         "doc_id",
         "warc_ts",

@@ -402,8 +402,8 @@ def build_ann_lanes(sf_dir: str) -> dict[str, pa.Table]:
     )
 
     # --- pstable_rehash_ann_topk: the virtual-rehashing lane
-    # (operators/ann.py _pstable_rehash_topk) at a deliberately small
-    # w0 = 0.8 (1/4 of the single-pass lane's 3.2, so the first rounds
+    # (operators/ann.py pstable_topk, max_rounds=6) at a deliberately small
+    # w0 = 0.8 (1/4 of the one-round lane's 3.2, so the first rounds
     # under-fill and the loop is actually exercised).  Raw floor cells
     # once, arithmetic >> r per round, candidates = collision count >= 16,
     # exact l2 rescoring, certificate kth <= c * radius * 2^r

@@ -2,9 +2,10 @@
 
 VERDICT r2 'what's wrong' #1: the `when(isNull, udf(html))` form gets its
 Python UDF hoisted into an unconditional ArrowEvalPython node, shipping every
-html blob to Python even when every row already has text.  All three callers
-(batch _prepare, sign_documents, streaming_exact_dedup) now share the
-split-union form; these tests pin the plan shape and the semantics.
+html blob to Python even when every row already has text.  Both callers
+(prepare_documents, which every signing path goes through, and
+streaming_exact_dedup) share the split-union form; these tests pin the plan
+shape and the semantics.
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ import pyspark.sql.functions as F
 from qalsh_spark.functions.signatures import (
     ensure_text,
     extract_text_bytes,
+    prepare_documents,
     sign_documents,
 )
 from qalsh_spark.config import DedupConfig
@@ -55,7 +57,7 @@ def test_sign_documents_mixed_rows(spark):
     """Signing a table where some rows carry only html must produce the same
     signatures as signing the pre-extracted texts."""
     cfg = DedupConfig()
-    mixed = sign_documents(_docs(spark), cfg)
+    mixed = sign_documents(prepare_documents(_docs(spark)), cfg)
     pre = _docs(spark).withColumn(
         "text",
         F.coalesce(
@@ -66,7 +68,7 @@ def test_sign_documents_mixed_rows(spark):
             ),
         ),
     ).drop("html")
-    expected = sign_documents(pre, cfg)
+    expected = sign_documents(prepare_documents(pre), cfg)
     a = {r["doc_id"]: tuple(r["minhash"]) for r in mixed.collect()}
     b = {r["doc_id"]: tuple(r["minhash"]) for r in expected.collect()}
     assert a == b and len(a) == 4

@@ -96,23 +96,6 @@ def test_simhash_band_keys_pigeonhole():
     assert not set(k1.tolist()) & set(k4.tolist())
 
 
-def test_anchors_content_defined():
-    run = "x" * 50 + " the shared verbatim canonical passage of considerable length repeated across documents " * 4
-    doc_a = "prefix one two three " + run + " suffix alpha"
-    doc_b = "completely different beginning text here " + run + " other ending"
-    sa = set(K.suffixes_for_text(doc_a))
-    sb = set(K.suffixes_for_text(doc_b))
-    # content-defined anchors inside the shared run yield shared suffix prefixes
-    shared = {s[:64] for s in sa} & {s[:64] for s in sb}
-    assert shared, "shared verbatim run must produce shared suffix buckets"
-
-
-def test_lcp():
-    assert K.lcp("abcdef", "abcxyz") == 3
-    assert K.lcp("", "abc") == 0
-    assert K.lcp("same", "same") == 4
-
-
 def test_suffix_keys_shared_run():
     """Docs sharing a >=200-char verbatim run must share >=1 suffix key
     (key = hash of lcp_min bytes after a content-defined anchor), and docs

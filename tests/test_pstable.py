@@ -8,6 +8,7 @@ numpy reproduction for l1.
 from __future__ import annotations
 
 import os
+import re
 
 import numpy as np
 import pytest
@@ -32,30 +33,28 @@ def mnist():
 
 
 def test_pstable_kernel_deterministic_and_udf_parity(spark):
-    """The Arrow UDF must produce byte-identical keys to the NumPy kernel
+    """The Arrow UDF must produce byte-identical cells to the NumPy kernel
     (same closure-lazy plane generation discipline as SRP)."""
-    from qalsh_spark.operators.ann import pstable_band_keys_udf
+    from qalsh_spark.operators.ann import pstable_cells_udf
 
     rng = np.random.default_rng(1)
     X = rng.standard_normal((40, 12))
     m, w, p = 8, 2.5, 2.0
     planes = K.pstable_planes(m, 12, p, 6)
     offs = K.pstable_offsets(m, w, 6)
-    want = K.pstable_band_keys_matrix(X, planes, offs, w, m, 1)
+    want = K.pstable_cells_matrix(X, planes, offs, w)
     df = spark.createDataFrame(
         [(i, [float(v) for v in X[i]]) for i in range(40)],
         "vec_id long, embedding array<double>",
     )
     got = (
-        df.select("vec_id", pstable_band_keys_udf(m, m, 1, p, w, 6)("embedding").alias("k"))
+        df.select("vec_id", pstable_cells_udf(m, p, w, 6)("embedding").alias("k"))
         .orderBy("vec_id")
         .collect()
     )
     assert np.array_equal(np.array([r["k"] for r in got]), want)
     # determinism across calls
-    assert np.array_equal(
-        K.pstable_band_keys_matrix(X, planes, offs, w, m, 1), want
-    )
+    assert np.array_equal(K.pstable_cells_matrix(X, planes, offs, w), want)
 
 
 def test_pstable_alpha_sane():
@@ -171,6 +170,17 @@ def test_pstable_l1_recall_on_mnist_subset(spark, mnist):
     assert recall >= 0.8, f"pstable l1 recall@10 {recall:.3f}"
 
 
+def _discovery_exchanges(plan: str) -> list[str]:
+    """Shuffle exchanges keyed on the discovery join's (j, cellr) columns —
+    present iff a side of the cell join is hash-exchanged rather than
+    broadcast."""
+    return [
+        line for line in plan.splitlines()
+        if "Exchange hashpartitioning(" in line
+        and re.search(r"\bj#", line) and re.search(r"\bcellr#", line)
+    ]
+
+
 def test_pstable_plan_broadcasts_query_keys(spark, mnist):
     """Discovery must not shuffle the big side: the query-key join is a
     BroadcastHashJoin and the only wide exchange before rescoring is the
@@ -183,7 +193,7 @@ def test_pstable_plan_broadcasts_query_keys(spark, mnist):
     out = pstable_topk(vec, q, k=5, p=2.0, w=1000.0, m=8, min_collisions=4)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
-    assert "Exchange hashpartitioning(band_key" not in plan, plan
+    assert not _discovery_exchanges(plan), plan
 
 
 def test_pstable_lhalf_recall_on_mnist_subset(spark, mnist):
@@ -291,7 +301,7 @@ def test_pstable_rehash_fills_underfilled_queries(spark, mnist):
 
 
 def test_pstable_rehash_discovery_broadcasts_query_cells(spark, mnist):
-    """The rehash rounds must keep the single-pass plan discipline: the
+    """The rehash rounds must keep the one-round plan discipline: the
     pending query cells broadcast (BroadcastHashJoin), the big side is
     never hash-exchanged for discovery — the only wide exchange is the
     groupBy(qid, vec_id) collision counter.  The per-round candidate set
@@ -308,13 +318,13 @@ def test_pstable_rehash_discovery_broadcasts_query_cells(spark, mnist):
         max_rounds=2, persists=ps,
     )
     assert ps, "rehash path must register its per-round persists"
-    # persists = [vcells, pending0, topk0, pending1?, topk1, ...]: pick the
-    # per-round top-k frames by their result schema
+    # persists = [vcells, topk0, pending1, ...]: pick the per-round top-k
+    # frames by their result schema
     rounds = [df for df in ps if "rank" in df.columns]
     assert rounds, "per-round top-k frames must be registered"
-    round_plan = rounds[0]._jdf.queryExecution().optimizedPlan().toString()
+    round_plan = rounds[0]._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in round_plan, round_plan
-    assert "Exchange hashpartitioning(cellr" not in round_plan, round_plan
+    assert not _discovery_exchanges(round_plan), round_plan
     # the pending set must ride as a broadcast JOIN, never as qid literals
     # baked into the plan (the r4 design collected qids and used isin)
     assert " IN (" not in round_plan and "isin" not in round_plan, round_plan
@@ -368,3 +378,50 @@ def test_pstable_rehash_10k_queries(spark):
         if qi in per_q and min(per_q[qi])[1] == qi
     )
     assert self_hits >= 0.95 * n, f"self-recall {self_hits}/{n}"
+
+
+def _synthetic_lane(spark, n=200, nq=5, d=8):
+    import pandas as pd
+
+    rng = np.random.default_rng(3)
+    X = rng.standard_normal((n, d))
+    vec = spark.createDataFrame(
+        pd.DataFrame({"vec_id": np.arange(n), "embedding": list(X)})
+    )
+    q = spark.createDataFrame(
+        pd.DataFrame({"qid": np.arange(nq), "qvec": list(X[:nq] + 0.01)})
+    )
+    return vec, q
+
+
+def test_pstable_topk_rejects_zero_rounds(spark):
+    """Round 0 of virtual rehashing IS the search: there is no separate
+    zero-round mode."""
+    from qalsh_spark.operators.ann import pstable_topk
+
+    vec, q = _synthetic_lane(spark)
+    with pytest.raises(ValueError, match="max_rounds"):
+        pstable_topk(vec, q, k=3, w=1.0, m=8, min_collisions=2, max_rounds=0)
+
+
+def test_pstable_one_round_is_one_lazy_plan(spark):
+    """A one-round search costs what a plain plan costs: building it runs
+    no Spark job (no pending count) and running it leaves no cached RDD
+    (no vector-cell or top-k persist), while it still answers every
+    query with its own point first."""
+    from qalsh_spark.operators.ann import pstable_topk
+
+    vec, q = _synthetic_lane(spark)
+    sc = spark.sparkContext
+    cached_before = sc._jsc.getPersistentRDDs().size()
+    group = "pstable-one-round-build"
+    sc.setJobGroup(group, group)
+    try:
+        out = pstable_topk(vec, q, k=3, p=2.0, w=4.0, m=8, min_collisions=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    rows = out.collect()
+    assert sc._jsc.getPersistentRDDs().size() == cached_before
+    first = {r["qid"]: r["neighbor_id"] for r in rows if r["rank"] == 1}
+    assert first == {i: i for i in range(5)}, first

@@ -159,6 +159,7 @@ def test_sign_partition_count_bounded_by_row_budget(spark):
     max(3*parallelism, ceil(rows / 62_500)) regardless of core count."""
     from qalsh_spark.functions.signatures import (
         _SIGN_ROWS_PER_PARTITION,
+        prepare_documents,
         sign_documents,
     )
 
@@ -166,12 +167,11 @@ def test_sign_partition_count_bounded_by_row_budget(spark):
     cores = spark.sparkContext.defaultParallelism
 
     # hint dominates: 4M docs -> 64 partitions even on a tiny local master
-    signed = sign_documents(docs.select("url", "text"), DedupConfig(),
-                            rows_hint=4_000_000)
+    prepared = prepare_documents(docs.select("url", "text"))
+    signed = sign_documents(prepared, DedupConfig(), rows_hint=4_000_000)
     want = max(3 * cores, -(-4_000_000 // _SIGN_ROWS_PER_PARTITION))
     assert signed.rdd.getNumPartitions() == want
 
     # small hint degrades to the parallelism target (unchanged behavior)
-    signed_small = sign_documents(docs.select("url", "text"), DedupConfig(),
-                                  rows_hint=300)
+    signed_small = sign_documents(prepared, DedupConfig(), rows_hint=300)
     assert signed_small.rdd.getNumPartitions() == 3 * cores

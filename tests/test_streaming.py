@@ -136,7 +136,7 @@ def test_incremental_signatures(spark, tmp_path):
     assert spark.read.parquet(out_dir).count() == 50
 
     # streamed signatures match the batch signing of the same rows
-    from qalsh_spark.functions.signatures import sign_documents
+    from qalsh_spark.functions.signatures import prepare_documents, sign_documents
     from qalsh_spark.sources.catalog import read_documents
 
     import pyarrow.parquet as _pq
@@ -144,7 +144,7 @@ def test_incremental_signatures(spark, tmp_path):
     full = str(tmp_path / "full")
     os.makedirs(full)
     _pq.write_table(tbl, os.path.join(full, "documents.parquet"))
-    batch = sign_documents(read_documents(spark, full), DedupConfig())
+    batch = sign_documents(prepare_documents(read_documents(spark, full)), DedupConfig())
     a = {r["doc_id"]: (tuple(r["minhash"]), r["simhash"])
          for r in batch.collect()}
     b = {r["doc_id"]: (tuple(r["minhash"]), r["simhash"])
