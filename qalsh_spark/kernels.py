@@ -627,3 +627,86 @@ def doc_id_from_url(url: str) -> int:
 
     v = int(hashlib.md5(url.encode("utf-8")).hexdigest()[:16], 16)
     return v - (1 << 64) if v >= (1 << 63) else v
+
+
+# --- connected components (operators/components.py) -------------------------
+# Each kernel takes one partition's whole edge list as two int64 arrays and
+# works on it with sorts and scatter ops only: no per-edge Python loop.
+
+
+def star_forest(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Union-find over the edges (a, b), returned as a spanning forest of
+    stars: one row (v, root) per vertex v that is not its component's
+    root, root = the component's minimum vertex, plus a (v, v) row for a
+    vertex whose only edges are self loops.  The forest connects exactly
+    what the edges connect.
+
+    Every pass hooks, for each edge whose endpoints still have different
+    roots, the larger root under the smaller (`np.minimum.at`), then jumps
+    every pointer to its root.  Pointers only ever decrease, so a
+    component's minimum stays a root and ends as every member's root; an
+    edge whose endpoints share a root leaves the working set for good."""
+    verts, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ia, ib = inv[: len(a)], inv[len(a):]
+    parent = np.arange(len(verts))
+    while len(ia):
+        ra, rb = parent[ia], parent[ib]
+        split = ra != rb
+        ia, ib, ra, rb = ia[split], ib[split], ra[split], rb[split]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    roots = verts[parent]
+    child = verts != roots
+    lone = ~child & ~np.isin(verts, roots[child])
+    keep = child | lone
+    return verts[keep], roots[keep]
+
+
+def _grouped(x: np.ndarray, y: np.ndarray):
+    """Distinct rows sorted by (x, y), the group-start mask of each x run
+    and every row's group number."""
+    order = np.lexsort((y, x))
+    x, y = x[order], y[order]
+    fresh = np.ones(len(x), dtype=bool)
+    fresh[1:] = (x[1:] != x[:-1]) | (y[1:] != y[:-1])
+    x, y = x[fresh], y[fresh]
+    start = np.ones(len(x), dtype=bool)
+    start[1:] = x[1:] != x[:-1]
+    return x, y, start, np.cumsum(start) - 1
+
+
+def large_star(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray, int]:
+    """Large-star step (Kiveris et al., SoCC 2014) on the rows (u, v) of a
+    symmetric edge list, every row of each key u present.  With
+    m = min(u, neighbors of u), each neighbor v > u is re-linked to m:
+    emits (v, m).  A vertex seen only through self loops keeps (u, u).
+    Returns the emitted rows and the count of links that moved (v > u and
+    m < u); 0 means the step reproduced its input edge set."""
+    u, v, start, gid = _grouped(u, v)
+    # the first neighbor of each sorted run is the smallest
+    m = np.minimum(u, v[start][gid])
+    up = v > u
+    sizes = np.diff(np.append(np.flatnonzero(start), len(u)))
+    lone = (v == u) & (sizes[gid] == 1)
+    changed = int(np.count_nonzero(up & (m < u)))
+    return np.concatenate([v[up], u[lone]]), np.concatenate([m[up], u[lone]]), changed
+
+
+def small_star(x: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.ndarray, int]:
+    """Small-star step on the rows (x, y), y <= x, every row of each key x
+    present.  With m = min y of x's run, x and each of its other lower
+    neighbors are linked to m: emits (x, m) once per x and (y, m) for each
+    y != m.  Returns the emitted rows and the count of links that moved
+    (y != m); 0 means the step reproduced its input edge set."""
+    x, y, start, gid = _grouped(x, y)
+    m = y[start][gid]
+    moved = y != m
+    return (
+        np.concatenate([x[start], y[moved]]),
+        np.concatenate([m[start], m[moved]]),
+        int(np.count_nonzero(moved)),
+    )

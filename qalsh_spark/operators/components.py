@@ -1,28 +1,42 @@
-"""Connected components over the verified edge list, via iterative DataFrame
-self-joins (SURVEY.md §2.3 J5 — absent in the reference, required by the north
-rule for clustering).
+"""Connected components over the verified edge list (SURVEY.md §2.3 J5 —
+absent in the reference, required by the north rule for clustering).
 
-Algorithm: min-label propagation with an adjacency that is symmetrized once.
-Each iteration every vertex takes min(own label, neighbors' labels); a
-localCheckpoint truncates the lineage so the plan doesn't grow exponentially.
-Convergence is O(graph diameter) iterations; the pair generator's star rule
-(operators/pairs.py) keeps hot-bucket components at diameter 2, so in practice
-this converges in a handful of rounds even on 10^12-doc inputs.
+Algorithm: a per-partition union-find pre-contraction, then rounds of
+large-star and small-star (Kiveris et al., "Connected Components in
+MapReduce and Beyond", SoCC 2014), each step one hash exchange plus a
+local group operation over NumPy arrays (`kernels.star_forest`,
+`kernels.large_star`, `kernels.small_star`).
 
-Shuffle discipline: the adjacency is hash-partitioned by the iteration join
-key (dst) ONCE and localCheckpoint'd — checkpoint preserves partitioning
-(when AQE is off, the below-10M default), and the labels side is always
-partitioned by doc_id as a groupBy/join output, so each iteration costs ONE
-exchange (the neighbor-min aggregate) instead of three.  Convergence
-detection is an O(1) decimal label-sum over the checkpointed labels — labels
-only decrease, so an unchanged sum means a fixed point.
+- Pre-contraction: every input partition of the edges becomes a spanning
+  forest of stars rooted at its local minima, with no exchange.  Edges
+  whose endpoints meet inside one partition never reach a round.
+- Rounds: large-star re-links each vertex's larger neighbors to the
+  smallest vertex of its neighborhood; small-star re-links each vertex's
+  smaller neighbors to the smallest of them.  Both steps only move links
+  toward smaller vertices and never disconnect, so the graph stays a
+  graph of the same components.  A round in which neither step moves a
+  link has a fixed point of both as its input: every component is a star
+  centered at its minimum, and `(doc_id, cluster_id)` is read off the
+  stars.  The alternation needs O(log^2 n) rounds in the worst case and
+  about log2(n) in practice (a 10k-vertex path with shuffled ids: 11-14);
+  min-label propagation needs one round per hop of the diameter.
+- One Spark job per round: both steps are chained and materialized by
+  one eager localCheckpoint, the moved-link counts come back from that
+  job as an accumulator, and the previous round's checkpoint is released
+  at once, so at most two rounds are cached at any instant.
+- Exchange width: the round exchanges use the edge input's own partition
+  count, so a small edge list pays for few shuffle blocks.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
+
+from qalsh_spark import kernels as K
 
 # Storage level for every lineage-truncating checkpoint of a LARGE DataFrame.
 # The JVM default for Dataset.localCheckpoint is Scala's MEMORY_AND_DISK,
@@ -43,6 +57,8 @@ _CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK
 assert not _CKPT_LEVEL.deserialized, (
     "_CKPT_LEVEL must be a serialized storage level (see OOM note above)"
 )
+
+_EDGES = "x long, y long"
 
 
 def _release_checkpoint(df: DataFrame, blocking: bool = False) -> None:
@@ -65,6 +81,24 @@ def _release_checkpoint(df: DataFrame, blocking: bool = False) -> None:
         pass  # best-effort: worst case we fall back to the ContextCleaner
 
 
+def _partition_step(kernel, changed=None):
+    """mapInPandas body running one graph kernel over a partition's whole
+    edge list; adds the links a star step moved to `changed`."""
+
+    def run(batches):
+        frames = list(batches)
+        if not frames:
+            return
+        x = np.concatenate([f["x"].to_numpy(np.int64) for f in frames])
+        y = np.concatenate([f["y"].to_numpy(np.int64) for f in frames])
+        out = kernel(x, y)
+        if changed is not None:
+            changed.add(out[2])
+        yield pd.DataFrame({"x": out[0], "y": out[1]})
+
+    return run
+
+
 def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
@@ -73,95 +107,66 @@ def connected_components(
     """edges(a, b) -> components(doc_id, cluster_id) for every vertex that
     appears in an edge. cluster_id = min doc_id in the component.
 
-    Raises RuntimeError when the labels are still changing after `max_iter`
-    rounds: unconverged labels split components, a silent wrong answer.
+    Raises RuntimeError when a link still moved in round `max_iter`:
+    unconverged stars split components, a silent wrong answer.
 
-    `persists`: optional list collecting the final labels checkpoint the
+    `persists`: optional list collecting the final round's checkpoint the
     returned frame reads from, so the caller can release it once the
     components are consumed (DedupResult.release())."""
-    # Symmetrize with ONE scan via explode instead of a self-union: Spark's
-    # plan canonicalization fails to reuse cache/exchange across self-union
-    # branches (measured 50x slower), and explode halves the input reads at
-    # any scale.  No distinct: the edge list is already one row per (a,b)
-    # (verify folds lanes; exact/escalation edges are disjoint by
-    # construction), so both directions are unique.
-    #
-    # Repartition by the iteration join key ONCE: localCheckpoint preserves
-    # the partitioning, so every loop iteration's sym-side of the neighbor
-    # join needs no exchange, and the labels side is always partitioned by
-    # doc_id (groupBy/join outputs) — the per-iteration cost drops to ONE
-    # exchange (the groupBy(src) aggregate) instead of three.
-    sym = (
-        edges.select(
+    sc = edges.sparkSession.sparkContext
+    width = max(1, edges.rdd.getNumPartitions())
+    graph = edges.select(
+        F.col("a").alias("x"), F.col("b").alias("y")
+    ).mapInPandas(_partition_step(K.star_forest), _EDGES)
+    for _ in range(max_iter):
+        changed = sc.accumulator(0)
+        # Symmetrize with one scan via explode (a self-union defeats
+        # exchange reuse), then large-star keyed by each endpoint and
+        # small-star keyed by the larger endpoint: two exchanges, one job.
+        sym = graph.select(
             F.explode(
                 F.array(
-                    F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-                    F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
+                    F.struct(F.col("x"), F.col("y")),
+                    F.struct(F.col("y").alias("x"), F.col("x").alias("y")),
+                )
+            ).alias("e")
+        ).select("e.x", "e.y")
+        nxt = (
+            sym.repartition(width, "x")
+            .mapInPandas(_partition_step(K.large_star, changed), _EDGES)
+            .repartition(width, "x")
+            .mapInPandas(_partition_step(K.small_star, changed), _EDGES)
+            .localCheckpoint(True, _CKPT_LEVEL)
+        )
+        # The superseded round is dead once nxt is materialized (eager
+        # checkpoint): release it now, so at most two rounds are cached
+        # at any instant instead of O(rounds) awaiting the ContextCleaner.
+        _release_checkpoint(graph)
+        graph = nxt
+        if changed.value == 0:
+            break
+    else:
+        _release_checkpoint(graph)
+        raise RuntimeError(
+            f"connected_components did not converge in max_iter={max_iter} "
+            "rounds (links still moving); the labels would split components"
+        )
+    if persists is not None:
+        persists.append(graph)
+    # Converged: each edge links a vertex to its component's minimum.  The
+    # centers appear once per leaf, so one aggregate keeps one row each.
+    return (
+        graph.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("x").alias("doc_id"), F.col("y").alias("cluster_id")),
+                    F.struct(F.col("y").alias("doc_id"), F.col("y").alias("cluster_id")),
                 )
             ).alias("e")
         )
-        .select("e.src", "e.dst")
-        .repartition(F.col("dst"))
+        .groupBy("e.doc_id")
+        .agg(F.min("e.cluster_id").alias("cluster_id"))
     )
-    sym = sym.localCheckpoint(True, _CKPT_LEVEL)
-    labels = (
-        sym.groupBy("src")
-        .agg(F.least(F.min("dst"), F.first("src")).alias("label"))
-        .withColumnRenamed("src", "doc_id")
-        .withColumn("label", F.least(F.col("label"), F.col("doc_id")))
-        .localCheckpoint(True, _CKPT_LEVEL)
-    )
-
-    # Labels only ever decrease, so the exact (decimal — no int64 overflow)
-    # sum of labels strictly decreases iff ANY label changed: convergence is
-    # one cheap aggregate per iteration instead of a self-join + count.
-    def _label_sum(df: DataFrame) -> object:
-        return df.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-
-    prev_sum = _label_sum(labels)
-    for _ in range(max_iter):
-        # neighbor-min pass: label'(v) = min(label(v), min_{u~v} label(u))
-        neigh = (
-            sym.join(labels.withColumnRenamed("doc_id", "dst"), on="dst")
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-            .withColumnRenamed("src", "doc_id")
-        )
-        new_labels = (
-            labels.join(neigh, on="doc_id", how="left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(True, _CKPT_LEVEL)
-        )
-        new_sum = _label_sum(new_labels)
-        # The superseded labels checkpoint is dead the moment new_labels is
-        # materialized (eager ckpt) — release it now so the loop caches at
-        # most 2 labels RDDs (prev + new) at any instant, deterministically,
-        # instead of O(iterations) frames awaiting the ContextCleaner.
-        _release_checkpoint(labels)
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    else:
-        _release_checkpoint(labels)
-        _release_checkpoint(sym)
-        raise RuntimeError(
-            f"connected_components did not converge in max_iter={max_iter} "
-            "rounds (label sum still falling); the labels would split "
-            "components"
-        )
-    # sym is not referenced by the returned (checkpointed) labels frame.
-    _release_checkpoint(sym)
-    if persists is not None:
-        persists.append(labels)
-    return labels.withColumnRenamed("label", "cluster_id")
 
 
 def clusters_with_representatives(

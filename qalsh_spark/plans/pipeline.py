@@ -54,7 +54,7 @@ class DedupResult:
 
     def release(self) -> None:
         """Free every cache the pipeline created: persisted frames and the
-        local checkpoints (pair generator hot keys, CC labels, escalation
+        local checkpoints (pair generator hot keys, CC final round, escalation
         edges).  Call once the result DataFrames have been materialized
         (written/collected) — a released checkpoint has no lineage to
         recompute from — since long-lived sessions (bench loops, repeated

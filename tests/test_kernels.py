@@ -162,3 +162,48 @@ def test_jaccard_sorted_property_vs_python_sets():
         assert got == want, (xs, ys, got, want)
 
     check()
+
+
+def _union_find_labels(a, b) -> dict[int, int]:
+    from tests.oracle import UnionFind
+
+    uf = UnionFind()
+    for x, y in zip(a.tolist(), b.tolist()):
+        uf.union(x, y)
+    return {v: uf.find(v) for v in uf.parent}
+
+
+def test_cc_kernels_match_union_find():
+    """The connected-components kernels run as Spark does: star_forest per
+    input partition, then rounds of large_star and small_star over hash
+    partitions until no link moves.  The stars they converge to label
+    every vertex with its component's minimum, self-loop-only vertices
+    included, as the single-process union-find does."""
+    rng = np.random.default_rng(0)
+    for trial in range(200):
+        n, m, parts = int(rng.integers(1, 60)), int(rng.integers(1, 120)), int(rng.integers(1, 6))
+        a, b = rng.integers(-n, n, m), rng.integers(-n, n, m)
+        b = np.where(rng.random(m) < 0.1, a, b)  # self loops
+        want = _union_find_labels(a, b)
+
+        v, root = K.star_forest(a, b)
+        assert {**{int(r): int(r) for r in root}, **dict(zip(v.tolist(), root.tolist()))} == want
+
+        def exchange(kernel, x, y, moved):
+            outs = [kernel(x[x % parts == p], y[x % parts == p]) for p in range(parts)]
+            moved.append(sum(o[2] for o in outs))
+            return np.concatenate([o[0] for o in outs]), np.concatenate([o[1] for o in outs])
+
+        where = rng.integers(0, parts, m)
+        forests = [K.star_forest(a[where == p], b[where == p]) for p in range(parts)]
+        x, y = np.concatenate([f[0] for f in forests]), np.concatenate([f[1] for f in forests])
+        for _ in range(50):
+            moved: list[int] = []
+            x, y = exchange(K.large_star, np.concatenate([x, y]), np.concatenate([y, x]), moved)
+            x, y = exchange(K.small_star, x, y, moved)
+            if sum(moved) == 0:
+                break
+        else:
+            raise AssertionError(f"trial {trial}: no convergence in 50 rounds")
+        got = {**{int(c): int(c) for c in y}, **dict(zip(x.tolist(), y.tolist()))}
+        assert got == want, trial

@@ -16,6 +16,7 @@ import pytest
 import pyspark.sql.functions as F
 
 from qalsh_spark import kernels as K
+from qalsh_spark.datagen import generate_embeddings
 from qalsh_spark.sources.refdata import (
     ground_truth_numpy,
     load_reference_set,
@@ -30,6 +31,14 @@ def mnist():
     if not os.path.exists(MNIST + ".ds"):
         pytest.skip("reference Mnist data not present")
     return load_reference_set(MNIST, p=2.0)
+
+
+@pytest.fixture(scope="module")
+def synthetic():
+    """1,000 unit 64-d points with planted clusters and 3 queries near the
+    first points: the plan-shape checks without the Mnist data."""
+    X = generate_embeddings(1000, d=64, seed=7).X
+    return X, X[:3] + 0.01
 
 
 def test_pstable_kernel_deterministic_and_udf_parity(spark):
@@ -181,19 +190,28 @@ def _discovery_exchanges(plan: str) -> list[str]:
     ]
 
 
-def test_pstable_plan_broadcasts_query_keys(spark, mnist):
+def _assert_plan_broadcasts_query_keys(spark, data, queries, w):
     """Discovery must not shuffle the big side: the query-key join is a
     BroadcastHashJoin and the only wide exchange before rescoring is the
     groupBy(qid, vec_id) collision counter."""
     from qalsh_spark.operators.ann import pstable_topk
 
-    data, queries, _, _ = mnist
-    vec = spark.createDataFrame(points_to_pandas(data[:1000]))
-    q = spark.createDataFrame(points_to_pandas(queries[:3], "qid", "qvec"))
-    out = pstable_topk(vec, q, k=5, p=2.0, w=1000.0, m=8, min_collisions=4)
+    vec = spark.createDataFrame(points_to_pandas(data))
+    q = spark.createDataFrame(points_to_pandas(queries, "qid", "qvec"))
+    out = pstable_topk(vec, q, k=5, p=2.0, w=w, m=8, min_collisions=4)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
     assert not _discovery_exchanges(plan), plan
+
+
+def test_pstable_plan_broadcasts_query_keys(spark, mnist):
+    data, queries, _, _ = mnist
+    _assert_plan_broadcasts_query_keys(spark, data[:1000], queries[:3], w=1000.0)
+
+
+def test_pstable_plan_broadcasts_query_keys_synthetic(spark, synthetic):
+    data, queries = synthetic
+    _assert_plan_broadcasts_query_keys(spark, data, queries, w=1.0)
 
 
 def test_pstable_lhalf_recall_on_mnist_subset(spark, mnist):
@@ -300,7 +318,7 @@ def test_pstable_rehash_fills_underfilled_queries(spark, mnist):
     assert recall >= 0.85, f"rehash recall@10 {recall:.3f}"
 
 
-def test_pstable_rehash_discovery_broadcasts_query_cells(spark, mnist):
+def _assert_rehash_discovery_broadcasts_query_cells(spark, data, queries, w):
     """The rehash rounds must keep the one-round plan discipline: the
     pending query cells broadcast (BroadcastHashJoin), the big side is
     never hash-exchanged for discovery — the only wide exchange is the
@@ -309,12 +327,11 @@ def test_pstable_rehash_discovery_broadcasts_query_cells(spark, mnist):
     where the discovery join lives."""
     from qalsh_spark.operators.ann import pstable_topk
 
-    data, queries, _, _ = mnist
-    vec = spark.createDataFrame(points_to_pandas(data[:1000]))
-    q = spark.createDataFrame(points_to_pandas(queries[:3], "qid", "qvec"))
+    vec = spark.createDataFrame(points_to_pandas(data))
+    q = spark.createDataFrame(points_to_pandas(queries, "qid", "qvec"))
     ps: list = []
     out = pstable_topk(
-        vec, q, k=5, p=2.0, w=50.0, m=8, min_collisions=4,
+        vec, q, k=5, p=2.0, w=w, m=8, min_collisions=4,
         max_rounds=2, persists=ps,
     )
     assert ps, "rehash path must register its per-round persists"
@@ -332,6 +349,18 @@ def test_pstable_rehash_discovery_broadcasts_query_cells(spark, mnist):
     assert "InMemoryTableScan" in final_plan, final_plan
     for df in ps:
         df.unpersist()
+
+
+def test_pstable_rehash_discovery_broadcasts_query_cells(spark, mnist):
+    data, queries, _, _ = mnist
+    _assert_rehash_discovery_broadcasts_query_cells(
+        spark, data[:1000], queries[:3], w=50.0
+    )
+
+
+def test_pstable_rehash_discovery_broadcasts_query_cells_synthetic(spark, synthetic):
+    data, queries = synthetic
+    _assert_rehash_discovery_broadcasts_query_cells(spark, data, queries, w=0.05)
 
 
 def test_pstable_rehash_10k_queries(spark):

@@ -78,13 +78,12 @@ def test_flagship_stores_no_deserialized_blocks(spark):
 
 
 def test_cc_releases_superseded_checkpoints(spark):
-    """connected_components must release each superseded labels checkpoint
-    (and the adjacency) deterministically instead of leaving O(iterations)
-    checkpointed RDDs for the ContextCleaner: on a path graph that needs
-    several min-propagation rounds, exactly ONE new cached RDD (the final
-    labels checkpoint) may remain after the call returns.  Parity is
-    asserted against the trivial oracle (a path is one component labeled by
-    its min vertex)."""
+    """connected_components must release each superseded round checkpoint
+    deterministically instead of leaving O(rounds) checkpointed RDDs for
+    the ContextCleaner: on a path graph that needs several rounds, exactly
+    ONE new cached RDD (the final round's checkpoint) may remain after the
+    call returns.  Parity is asserted against the trivial oracle (a path
+    is one component labeled by its min vertex)."""
     from qalsh_spark.operators.components import connected_components
 
     def cached_ids():
@@ -92,8 +91,9 @@ def test_cc_releases_superseded_checkpoints(spark):
         return {i.id() for i in infos if i.numCachedPartitions() > 0}
 
     before = cached_ids()
-    # path 0-1-2-...-29: diameter 29 -> several iterations even with
-    # doubling-style min propagation; single component labeled 0.
+    # path 0-1-2-...-29 over several input partitions: pre-contraction
+    # leaves one star per partition, which the rounds merge; single
+    # component labeled 0.
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(29)], "a long, b long"
     )
@@ -104,27 +104,31 @@ def test_cc_releases_superseded_checkpoints(spark):
 
     leaked = cached_ids() - before
     assert len(leaked) <= 1, (
-        "connected_components left more than the final labels checkpoint "
+        "connected_components left more than the final round checkpoint "
         f"cached (leaked RDD ids: {sorted(leaked)}) — superseded per-"
-        "iteration checkpoints must be released inside the loop"
+        "round checkpoints must be released inside the loop"
     )
 
 
 def test_cc_raises_when_not_converged(spark):
-    """Min-label propagation moves a label one hop per round, so a path
-    longer than 2 x max_iter cannot converge: connected_components must
-    raise instead of returning labels that split the path into clusters."""
+    """A round of large-star + small-star moves a link whenever some
+    component is not yet a star centered at its minimum, so a graph that
+    pre-contraction cannot collapse needs a second round to converge:
+    with max_iter=1, connected_components must raise instead of returning
+    labels that split the graph into clusters.  One edge per input
+    partition leaves pre-contraction nothing to merge, and any path of
+    3+ vertices has a vertex with two smaller neighbors or with a smaller
+    and a larger one, which the first round must move."""
     from qalsh_spark.operators.components import connected_components
 
-    max_iter = 3
-    n = 2 * max_iter + 2
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "a long, b long"
-    )
+    order = [3, 7, 0, 5, 2, 6, 1, 4]  # a path over shuffled ids
+    path = list(zip(order, order[1:]))
+    edges = spark.sparkContext.parallelize(path, len(path)).toDF("a long, b long")
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=max_iter)
+        connected_components(edges, max_iter=1)
     # the same path converges, to one component, given enough rounds
-    comps = connected_components(edges, max_iter=n).collect()
+    comps = connected_components(edges).collect()
+    assert {r["doc_id"] for r in comps} == set(order)
     assert {r["cluster_id"] for r in comps} == {0}
 
 
